@@ -357,7 +357,7 @@ object SparkEntry {
   // ------------------------------------------------------------------ entry
 
   /** Flagship: the full ER pipeline (MinHash-LSH blocking -> salted
-    * candidate join -> banded WFA scoring -> large-star/small-star
+    * candidate join -> banded WFA scoring -> union-find contraction
     * clustering) on sf0.001, returning non-singleton entities. */
   def entry(spark: SparkSession): DataFrame = {
     val corpus = Corpus.withDerived(

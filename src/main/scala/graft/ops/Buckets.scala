@@ -55,7 +55,7 @@ object Buckets {
       .groupBy(kc: _*)
       .agg(collect_list(col("id")).as("ids"))
       .select($"ids".as[Seq[Long]])
-      .flatMap(ids => localPairs[Long](ids, identity, (_, _) => true))
+      .flatMap(ids => localPairs[Long](ids, maxGroup, identity, (_, _) => true))
       .toDF("id_a", "id_b")
       .dropDuplicates("id_a", "id_b")
   }
@@ -65,10 +65,12 @@ object Buckets {
     * (min, max). The single source of the cap-bounded triangle loop —
     * [[cappedSelfJoinPairs]] and Er.candidatePairs both route through it,
     * so the bounded-buffer/orientation invariants live in one place.
-    * Callers guarantee |ms| <= cap via the eligibility pre-filter. */
-  private[graft] def localPairs[T](ms: Seq[T], id: T => Long,
+    * Callers keep |ms| <= cap with the eligibility pre-filter; a list over
+    * `cap` fails loud rather than buffering an unbounded triangle. */
+  private[graft] def localPairs[T](ms: Seq[T], cap: Int, id: T => Long,
                                    keep: (T, T) => Boolean): Seq[(Long, Long)] = {
     val n = ms.length
+    require(n <= cap, s"bucket of $n members exceeds the pairing cap $cap")
     val out = new scala.collection.mutable.ArrayBuffer[(Long, Long)](n * (n - 1) / 2)
     var i = 0
     while (i < n) {

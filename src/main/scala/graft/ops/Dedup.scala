@@ -337,9 +337,10 @@ object Dedup {
 
   /** Materialize the dedup: one survivor (the minimum id) per connected
     * component of the near-dup pair graph, singletons kept. Composes the
-    * ER clustering (large-star/small-star CC — O(log n) shuffle-bounded
-    * rounds) with an anti-join, so the result is the deduped corpus a
-    * training pipeline actually feeds downstream. `docs` needs an `id`
+    * ER clustering (union-find contraction CC — a contraction shuffle and
+    * a grouping per round, with an exact star-forest check) with an
+    * anti-join, so the result is the deduped corpus a training pipeline
+    * actually feeds downstream. `docs` needs an `id`
     * column; `pairs` is any (id_a, id_b) near-dup pair set (MinHash,
     * SimHash, embedding, or WFA-scored edges). */
   def dedupSurvivors(docs: DataFrame, pairs: DataFrame): DataFrame = {

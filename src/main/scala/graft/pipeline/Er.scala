@@ -15,16 +15,10 @@ final case class ErConfig(
     shingleK: Int = 5,       // char-shingle length for MinHash
     numHashes: Int = 63,     // MinHash signature length
     lshBands: Int = 21,      // bands (r = numHashes/lshBands rows per band)
-    maxBlockSize: Int = 16,  // retained config surface; since round 6 all
-                             // blocks <= saltedMaxBlockSize pair in one
-                             // task-local loop (see candidatePairs), so this
-                             // no longer selects a join path
     saltedMaxBlockSize: Int = 64, // pairing cap: blocks beyond it are dropped
                              // as boilerplate (pair work grows as
                              // sum(blockSize^2)); also bounds the round-6
                              // collect_list buffer
-    saltBuckets: Int = 4,    // retained config surface (round-1..5 salted
-                             // triangle join fan-out; unused since round 6)
     seed: Long = 42L,
     emitCigars: Boolean = false) {
   require(tau < band, s"tau ($tau) must be < band ($band)")
@@ -103,6 +97,7 @@ object Er {
     import spark.implicits._
     val keys = Seq("lang", "band", "bhash")
     val band = cfg.band
+    val cap = cfg.saltedMaxBlockSize
     // Block sizing via groupBy+join, NOT count().over(Window): the window
     // shipped every row of a hot key to one task with no partial
     // aggregation (68% of the round-1 bench). The eligibility list is one
@@ -116,7 +111,7 @@ object Er {
     val cached = blocks.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val elig = cached.groupBy(keys.map(col): _*)
       .agg(count(lit(1)).as("bsz"))
-      .where(col("bsz") >= 2 && col("bsz") <= cfg.saltedMaxBlockSize)
+      .where(col("bsz") >= 2 && col("bsz") <= cap)
       .select(keys.map(col): _*)
     cached.join(elig, keys)
       .groupBy(keys.map(col): _*)
@@ -125,7 +120,7 @@ object Er {
       // task-local pair loop over one block (<= cap members; shared
       // cap-bounded triangle loop — see Buckets.localPairs) with the
       // |len diff| < band pre-filter applied in-loop
-      .flatMap(ms => graft.ops.Buckets.localPairs[(Long, Int)](ms, _._1,
+      .flatMap(ms => graft.ops.Buckets.localPairs[(Long, Int)](ms, cap, _._1,
         (a, b) => math.abs(a._2 - b._2) < band))
       .toDF("id_a", "id_b")
       .dropDuplicates("id_a", "id_b")
@@ -265,100 +260,100 @@ object Er {
     scored.where(!col("saturated") && col("distance") <= lit(cfg.tau))
       .select("id_a", "id_b")
 
-  /** Iterative large-star/small-star connected components over DataFrames
-    * (Kiveris et al., "Connected Components in MapReduce and Beyond" —
-    * O(log n) rounds, shuffle-bounded; the scale-safe alternative to label
-    * propagation whose round count is the component diameter). Driver loop
-    * with a per-round lineage cut (reliable checkpoint on a cluster,
-    * localCheckpoint on a single box — SURVEY.md §4).
+  /** Connected components over DataFrames by repeated union-find
+    * contraction. A round is one contraction shuffle plus one grouping:
+    * every edge is keyed under both endpoints and hash-shuffled by that
+    * key, so a task holds every edge incident to the keys it owns; the
+    * task runs a union-find over those edges in which the smaller id
+    * always wins the root ([[graft.core.LongUnionFind]]) and emits
+    * (node, root) for every node it saw, a root as (root, root); a
+    * groupBy(node) then collects each node's distinct roots. A round
+    * contracts each key's whole neighbourhood to a root at or below the
+    * neighbourhood minimum — at least what a large-star step (Kiveris et
+    * al., "Connected Components in MapReduce and Beyond") does at that
+    * key — and never changes the components. When AQE coalesces the edge
+    * shuffle into one partition (small graphs), one round contracts the
+    * whole graph.
     *
-    * Returns (id, entity) for every node present in `edgeDf`; entity is the
-    * component's minimum id.
+    * Convergence is checked exactly, whatever the shuffle's partitioning:
+    * the round's output is final iff it is a star forest — every node
+    * maps to exactly one root and no root maps anywhere else. Because
+    * roots map to themselves, "no node with more than one root" decides
+    * both, as a narrow scan of the grouped round; that scan is also the
+    * action that materializes the round's lazy lineage cut (reliable
+    * checkpoint on a cluster, localCheckpoint on a single box —
+    * SURVEY.md §4). An unconverged round's (node, root) pairs are the
+    * next round's edges.
     *
-    * @param maxIters round cap — a backstop, not a tuning knob: large-star/
-    *   small-star converges in O(log n) rounds, so 50 covers ~2^50 nodes.
-    *   Exhausting it means the star contraction is incomplete and the
-    *   entities would be WRONG, so the loop fails loud rather than
-    *   returning silently (round-4 verdict). */
+    * Per-task state is the edges incident to the task's keys; in ER,
+    * blocking caps a node's degree at lshBands × (saltedMaxBlockSize − 1)
+    * (21 × 63 at the defaults).
+    *
+    * Returns (id, entity) for every node present in `edgeDf`; entity is
+    * the component's minimum id, roots included.
+    *
+    * @param maxIters round cap — a backstop, not a tuning knob. Until a
+    *   component is a star, each round links its minimum to everything
+    *   within two hops of it, so the loop always terminates; measured
+    *   round counts grow with the log of the path length (a 20k-node path
+    *   with shuffled ids takes 11 rounds over 64 partitions; a 500-node
+    *   one over 500 partitions, about one key per task, also 11). Exhausting
+    *   the cap means the contraction is incomplete and the entities would
+    *   be WRONG, so the loop fails loud rather than returning silently
+    *   (round-4 verdict). */
   def connectedComponents(edgeDf: DataFrame, maxIters: Int = 50): DataFrame = {
     val spark = edgeDf.sparkSession
+    import spark.implicits._
     // per-round lineage cut: reliable checkpoint when the session has a
     // checkpoint dir (the cluster path — survives executor loss and keeps
     // the plan O(1) regardless of round count); localCheckpoint otherwise
     // (single-box path: RDD blocks on local storage). Checkpoint files of
     // superseded rounds accumulate until GC'd — long-lived cluster
     // sessions should set spark.cleaner.referenceTracking.cleanCheckpoints
-    // =true so finished rounds' files are removed (see SCALING.md)
-    // round 6: the localCheckpoint is LAZY — the per-round signature()
-    // aggregation right after it is the action that materializes the
-    // checkpointed blocks, so each round runs ONE job instead of two
-    // (eager-checkpoint job + signature job; ~6 rounds saved 6 job
-    // round-trips in the bench's cluster stage). The reliable-checkpoint
-    // branch stays eager: a lazy reliable checkpoint would recompute the
-    // round's plan a second time when writing the checkpoint files.
+    // =true so finished rounds' files are removed (see SCALING.md).
+    // The localCheckpoint is LAZY: the round's convergence check is the
+    // action that materializes it, so a round costs one action. The
+    // reliable-checkpoint branch stays eager: a lazy reliable checkpoint
+    // would recompute the round's plan a second time when writing files.
     def cut(df: DataFrame): DataFrame =
       if (spark.sparkContext.getCheckpointDir.isDefined) df.checkpoint()
       else df.localCheckpoint(eager = false)
 
-    def largeStar(e: DataFrame): DataFrame = {
-      val bidir = e.select(col("u"), col("v"))
-        .union(e.select(col("v").as("u"), col("u").as("v")))
-      val mins = bidir.groupBy("u")
-        .agg(min("v").as("mn"))
-        .select(col("u"), least(col("u"), col("mn")).as("m"))
-      bidir.join(mins, "u")
-        .where(col("v") > col("u"))
-        .select(col("v").as("u"), col("m").as("v"))
-        .distinct()
-    }
+    // one round: (u, v) edges -> (u, targets), the distinct roots u was
+    // contracted to across the tasks that saw it
+    def contract(e: DataFrame): DataFrame =
+      e.select(explode(array(col("u"), col("v"))).as("k"), col("u"), col("v"))
+        .repartition(col("k"))
+        .select($"u".as[Long], $"v".as[Long])
+        .mapPartitions { it =>
+          val uf = new graft.core.LongUnionFind()
+          it.foreach { case (u, v) => uf.union(u, v) }
+          val out = new scala.collection.mutable.ArrayBuffer[(Long, Long)](uf.size)
+          uf.foreachRoot((n, r) => out += ((n, r)))
+          out.iterator
+        }
+        .toDF("u", "v")
+        .groupBy("u").agg(collect_set("v").as("targets"))
 
-    def smallStar(e: DataFrame): DataFrame = {
-      // orient each edge toward the larger endpoint: (hi, lo)
-      val oriented = e.select(
-        greatest(col("u"), col("v")).as("u"),
-        least(col("u"), col("v")).as("v"))
-      val mins = oriented.groupBy("u").agg(min("v").as("m"))
-      val moved = oriented.join(mins, "u")
-        .select(col("v").as("u"), col("m").as("v"))
-      val self = mins.select(col("u"), col("m").as("v"))
-      moved.union(self).where(col("u") =!= col("v")).distinct()
-    }
+    // roots also emit (root, root), so "every node has exactly one
+    // target" alone says the map is idempotent: a star forest
+    def isStarForest(round: DataFrame): Boolean =
+      round.where(size(col("targets")) =!= 1).isEmpty
 
-    var e = edgeDf
+    var round = cut(contract(edgeDf
       .select(col("id_a").as("u"), col("id_b").as("v"))
-      .where(col("u") =!= col("v"))
-      .distinct()
-      .localCheckpoint(eager = false) // materialized by isEmpty below
-    if (e.isEmpty) {
-      return e.select(col("u").as("id"), col("v").as("entity"))
-    }
-
-    var converged = false
-    var iters = 0
-    var sig = signature(e)
+      .where(col("u") =!= col("v"))))
+    var converged = isStarForest(round)
+    var iters = 1
     while (!converged && iters < maxIters) {
-      val next = cut(smallStar(largeStar(e)))
-      val nextSig = signature(next)
-      converged = nextSig == sig
-      sig = nextSig
-      e = next
+      round = cut(contract(round.select(col("u"), explode(col("targets")).as("v"))))
+      converged = isStarForest(round)
       iters += 1
     }
     require(converged,
       s"connected components did not converge within $maxIters rounds — " +
-        "star contraction incomplete, entities would be wrong")
-    // converged state is a forest of stars rooted at component minima
-    val members = e.select(col("u").as("id"), col("v").as("entity"))
-    val roots = e.select(col("v").as("id"), col("v").as("entity")).distinct()
-    members.union(roots).distinct()
-  }
-
-  private def signature(e: DataFrame): (Long, Long) = {
-    // order-independent, overflow-free (ANSI-safe) edge-set fingerprint
-    val row = e.agg(
-      count(lit(1)).as("c"),
-      coalesce(bit_xor(xxhash64(col("u"), col("v"))), lit(0L)).as("h")).head()
-    (row.getLong(0), row.getLong(1))
+        "contraction incomplete, entities would be wrong")
+    round.select(col("u").as("id"), col("targets")(0).as("entity"))
   }
 
   /** Final entity table: every corpus id mapped to its entity (singletons
@@ -446,7 +441,7 @@ object Er {
 
   // ------------------------------------------------------------ full pipeline
 
-  /** End-to-end, unchckpointed (testing / small inputs). Returns
+  /** End-to-end, uncheckpointed (testing / small inputs). Returns
     * (id, entity). */
   def run(corpus: DataFrame, cfg: ErConfig): DataFrame = {
     val b = blocks(corpus, cfg)

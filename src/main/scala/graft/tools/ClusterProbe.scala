@@ -4,8 +4,9 @@ import graft.pipeline.{Corpus, Er, ErConfig}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.storage.StorageLevel
 
-/** Round-6 diagnostic: the Bench cluster stage (edges -> large/small-star
-  * CC -> entities) in isolation, warm best-of-2. Not driver contract. */
+/** Round-6 diagnostic: the Bench cluster stage (edges -> union-find
+  * contraction CC -> entities) in isolation, warm best-of-2. Not part of
+  * the contract query surface. */
 object ClusterProbe {
   def main(args: Array[String]): Unit = {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt

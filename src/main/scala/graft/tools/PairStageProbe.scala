@@ -33,6 +33,10 @@ object PairStageProbe {
       println(f"[pairprobe] $name%-28s ${math.min(r1._1, r2._1)}%8.2fs (r1=${r1._1}%.2f r2=${r2._1}%.2f) rows=${r2._2}")
     }
     val cfg = ErConfig()
+    // the round-1..5 two-path plan's knobs: direct self-join cap and
+    // salted triangle fan-out
+    val maxBlockSize = 16
+    val saltBuckets = 4
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val nDocs = spark.read.parquet(s"$sfDir/documents.parquet").count()
     val corpus = Corpus.withDerived(Corpus.generate(spark,
@@ -60,12 +64,12 @@ object PairStageProbe {
           abs(col("len_a") - col("len_b")) < lit(cfg.band))
         .select("id_a", "id_b")
     }
-    val small = pairsOf(sized.filter(col("bsz") <= cfg.maxBlockSize).drop("bsz"), keys)
+    val small = pairsOf(sized.filter(col("bsz") <= maxBlockSize).drop("bsz"), keys)
     time("small_selfjoin")(small.count())
 
-    val k = cfg.saltBuckets
+    val k = saltBuckets
     val mid = sized.filter(
-      col("bsz") > cfg.maxBlockSize && col("bsz") <= cfg.saltedMaxBlockSize)
+      col("bsz") > maxBlockSize && col("bsz") <= cfg.saltedMaxBlockSize)
       .drop("bsz")
       .withColumn("salt", pmod(xxhash64(col("id")), lit(k)).cast("int"))
     val midA = mid

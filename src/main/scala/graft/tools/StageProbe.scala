@@ -24,6 +24,8 @@ object StageProbe {
       println(f"[probe] $name%-22s ${(System.nanoTime() - t0) / 1e9}%8.2fs rows=$n")
     }
     val cfg = ErConfig()
+    // round-1..5 direct self-join cap (the plan this probe rebuilds)
+    val maxBlockSize = 16
     val genCfg = Corpus.GenConfig(nGroups = 50000, partitions = cpus.toInt * 2)
     val corpus = Corpus.withDerived(Corpus.generate(spark, genCfg).toDF())
       .persist(StorageLevel.MEMORY_AND_DISK)
@@ -34,7 +36,7 @@ object StageProbe {
     val keys = Seq("lang", "band", "bhash")
     val sized = blocks.withColumn("bsz",
       count(lit(1)).over(Window.partitionBy(keys.map(col): _*)))
-    val kept = sized.filter(col("bsz") <= cfg.maxBlockSize).drop("bsz")
+    val kept = sized.filter(col("bsz") <= maxBlockSize).drop("bsz")
       .persist(StorageLevel.MEMORY_AND_DISK)
     time("window_cap")(kept.count())
     val a = kept.select(col("lang"), col("band"), col("bhash"),

@@ -221,6 +221,15 @@ class OpsSpec extends AnyFunSuite with SparkTestBase {
     }
   }
 
+  test("localPairs fails loud on a member list over its cap") {
+    val ms = (1L to 5L).toSeq
+    assert(Buckets.localPairs[Long](ms, 5, identity, (_, _) => true).size == 10)
+    val ex = intercept[IllegalArgumentException] {
+      Buckets.localPairs[Long](ms, 4, identity, (_, _) => true)
+    }
+    assert(ex.getMessage.contains("exceeds the pairing cap 4"))
+  }
+
   test("minhash est_jaccard is the signature match fraction") {
     val out = Dedup.minHashPairs(docs, threshold = 0.0, maxBucket = 64)
       .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap

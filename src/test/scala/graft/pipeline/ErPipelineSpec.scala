@@ -156,10 +156,21 @@ class ErPipelineSpec extends AnyFunSuite with SparkTestBase {
     assert(comps(10L) == 10L && comps(11L) == 10L)
   }
 
+  /** Runs `f` with AQE partition coalescing on or off, restoring the
+    * session's setting afterwards. Off keeps the clustering shuffle at
+    * its 8 partitions, so contraction needs several rounds. */
+  private def withCoalescing[A](on: Boolean)(f: => A): A = {
+    val key = "spark.sql.adaptive.coalescePartitions.enabled"
+    val prev = spark.conf.getOption(key)
+    spark.conf.set(key, on.toString)
+    try f
+    finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+  }
+
   test("connected components: random graphs match a union-find oracle") {
     import spark.implicits._
     val rnd = new scala.util.Random(77)
-    for (trial <- 1 to 3) {
+    for (coalesce <- Seq(true, false); trial <- 1 to 3) {
       val n = 150
       val edges = (1 to 220).map(_ => (rnd.nextInt(n).toLong, rnd.nextInt(n).toLong))
         .filter { case (a, b) => a != b }
@@ -175,28 +186,36 @@ class ErPipelineSpec extends AnyFunSuite with SparkTestBase {
           // component min = find with full path compression to the min root
           var r = v.toInt; while (parent(r) != r) r = parent(r); r.toLong
         }).toMap
-      val got = Er.connectedComponents(edges.toDF("id_a", "id_b")).collect()
-        .map(r => r.getLong(0) -> r.getLong(1)).toMap
-      assert(got == expected, s"trial $trial")
+      val got = withCoalescing(coalesce) {
+        Er.connectedComponents(edges.toDF("id_a", "id_b")).collect()
+      }.map(r => r.getLong(0) -> r.getLong(1))
+      assert(got.length == expected.size, s"trial $trial coalesce=$coalesce: duplicate ids")
+      assert(got.toMap == expected, s"trial $trial coalesce=$coalesce")
     }
   }
 
   test("connected components: 200-node path converges (log-round algorithm)") {
     import spark.implicits._
     val e = (0L until 199L).map(i => (i, i + 1)).toDF("id_a", "id_b")
-    val comps = Er.connectedComponents(e).collect().map(r => r.getLong(0) -> r.getLong(1))
-    assert(comps.length == 200)
-    assert(comps.forall(_._2 == 0L))
+    for (coalesce <- Seq(true, false)) {
+      val comps = withCoalescing(coalesce)(Er.connectedComponents(e).collect())
+        .map(r => r.getLong(0) -> r.getLong(1))
+      assert(comps.length == 200, s"coalesce=$coalesce")
+      assert(comps.forall(_._2 == 0L), s"coalesce=$coalesce")
+    }
   }
 
   test("connected components: fails loud when the round cap exhausts before convergence") {
     import spark.implicits._
-    // a 200-node path needs several large/small-star rounds; cap 1 cannot
-    // converge, and an incomplete contraction must raise, not return wrong
-    // entities silently (round-4 verdict)
+    // with coalescing off the path's edges spread over 8 partitions, so
+    // one contraction round leaves chains behind; cap 1 cannot converge,
+    // and an incomplete contraction must raise, not return wrong entities
+    // silently (round-4 verdict)
     val e = (0L until 199L).map(i => (i, i + 1)).toDF("id_a", "id_b")
-    val ex = intercept[IllegalArgumentException] {
-      Er.connectedComponents(e, maxIters = 1).collect()
+    val ex = withCoalescing(on = false) {
+      intercept[IllegalArgumentException] {
+        Er.connectedComponents(e, maxIters = 1).collect()
+      }
     }
     assert(ex.getMessage.contains("did not converge"))
   }
