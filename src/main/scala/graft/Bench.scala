@@ -54,8 +54,8 @@ object Bench {
         if (new java.io.File("/dev/shm").isDirectory) "/dev/shm/graft-spark"
         else System.getProperty("java.io.tmpdir"))
       // one shuffle partition per core: over-partitioning was the round-2
-      // bench's dominant pathology on this VM (graft.tools.PairScale; many
-      // small /dev/shm shuffle files x 32 concurrent writers). Skew
+      // bench's dominant pathology on this VM (many small /dev/shm
+      // shuffle files x 32 concurrent writers). Skew
       // smoothing comes from AQE. On a real cluster this is 2-3x total cores.
       .config("spark.sql.shuffle.partitions", cpus.toString)
       .config("spark.sql.adaptive.enabled", "true")
@@ -83,8 +83,8 @@ object Bench {
   /** @param interleaveWith when Some(n): additionally measure the scoring
     *   stage at n-thread and cpus-thread concurrency INTERLEAVED (A/B x3,
     *   max per level) inside this session — concurrency pinned by the
-    *   coalesced partition count of the cached input, floor disabled —
-    *   so the pair is immune to the minutes-scale host-steal drift that
+    *   coalesced partition count of the cached input, which Er.score
+    *   keeps — so the pair is immune to the minutes-scale host-steal drift that
     *   the two-session legs inherit. */
   private def runLeg(spark: SparkSession, cpus: Int, sfDir: String,
                      cfg: ErConfig, withOperator: Boolean = true,
@@ -97,8 +97,7 @@ object Bench {
       .persist(StorageLevel.MEMORY_AND_DISK)
     val (nFiles, tGen) = time(corpus.count())
 
-    // pre-repartition so the timed scoring runs are pure compute (the
-    // parallelism floor in Er.score then has nothing to do)
+    // pre-repartition so the timed scoring runs are pure compute
     val pairsIn = Er.withContents(
         Er.candidatePairs(Er.blocks(corpus, cfg), cfg), corpus)
       .repartition(cpus * 2)
@@ -123,7 +122,7 @@ object Bench {
       // each read cached partitions, so exactly `low` threads compute
       def probe(parts: Int): Double = {
         val (_, sec) = time(
-          Er.score(scoreBenchIn.coalesce(parts), cfg, parallelismFloor = false).count())
+          Er.score(scoreBenchIn.coalesce(parts), cfg).count())
         nScoreBench / sec
       }
       val legs = (1 to 3).map(_ => (probe(low), probe(cpus)))

@@ -223,35 +223,6 @@ object SparkEntry {
        |  WHERE bl.id <> br.id_r AND abs(bl.len - br.len_r) < 64
        |)""".stripMargin
 
-  /** Parallelism FLOOR for CPU-bound scorer inputs (see Er.score): only
-    * repartition narrow inputs — an already-wide input must not be
-    * coalesced down (and content bytes shouldn't take a pointless
-    * shuffle). 2x cores, not 4x: over-partitioning is this VM's dominant
-    * bench pathology (graft.tools.PairScale). `.rdd.getNumPartitions`
-    * forces physical planning (not execution) — acceptable for a
-    * once-per-query guard. */
-  private def widenIfNarrow(spark: SparkSession, df: DataFrame): DataFrame = {
-    val target = spark.sparkContext.defaultParallelism * 2
-    if (df.rdd.getNumPartitions < target) df.repartition(target) else df
-  }
-
-  /** Width guard for CPU-bound scorer inputs attached via
-    * [[Er.withContents]] (round 6): in its broadcast branch the pair side
-    * is already repartitioned to 2x parallelism, so the attached frame
-    * arrives wide; in the shuffled FALLBACK branch the attach output is
-    * AQE-coalesced by bytes (~64 MB targets), which can strangle a
-    * compute-heavy mapPartitions down to a few tasks — repartition it
-    * then. The branch is decided exactly like withContents decides it
-    * (same [[Er.fitsBroadcast]] estimate on the same projection), keeping
-    * this a plan-time decision with no `.rdd` probe (which would eagerly
-    * execute the AQE subtree once before the real action). */
-  private def scorerWidth(spark: SparkSession, attached: DataFrame,
-                          corpus: DataFrame): DataFrame =
-    if (Er.fitsBroadcast(
-        corpus.select(col("id"), col("content").cast("binary").as("bytes"))))
-      attached
-    else attached.repartition(spark.sparkContext.defaultParallelism * 2)
-
   /** WFA band derived from the data (max content length + 1 > any possible
     * distance, so WFA never saturates and equals unit-cost Levenshtein),
     * with an ASCII assertion — DuckDB's levenshtein() is char-level while
@@ -294,20 +265,17 @@ object SparkEntry {
     * LevenshteinSpec, and the DuckDB oracle (exact levenshtein()) is
     * unchanged. The banded reference-parity WFA stays the kernel of
     * Er.score — this swap is only for the never-saturating contract
-    * configuration. Content attach rides [[Er.withContents]]'s
-    * size-gated broadcast (pairs are widened BEFORE the attach, so when
-    * the corpus broadcasts the content bytes never shuffle at all). */
+    * configuration. Content attach and the scorer's width come from
+    * [[Er.withContents]]: when the corpus broadcasts, the pairs are widened
+    * BEFORE the attach and the content bytes never shuffle at all. */
   private def erScores(spark: SparkSession, dir: String): DataFrame =
     cachedFrame(spark, s"er_scores:$dir") {
       import spark.implicits._
       val corpus = erInput(spark, dir)
       val pairs = erCandidates(spark, dir)
       erBand(spark, dir) // retained guards: non-empty corpus, pure ASCII (oracle exactness)
-      // withContents widens the skinny pair frame itself in its broadcast
-      // branch; scorerWidth re-widens only the shuffled fallback (whose
-      // AQE byte-based coalescing would otherwise serialize the scorer)
-      val withBytes = scorerWidth(spark, Er.withContents(pairs, corpus), corpus)
-      withBytes.select($"id_a".as[Long], $"id_b".as[Long],
+      Er.withContents(pairs, corpus)
+        .select($"id_a".as[Long], $"id_b".as[Long],
           $"bytes_a".as[Array[Byte]], $"bytes_b".as[Array[Byte]])
         .mapPartitions { it =>
           val ws = new graft.core.LevenshteinWorkspace()
@@ -337,10 +305,8 @@ object SparkEntry {
     // broadcast with a shuffled fallback (an earlier draft broadcast the
     // content-bearing half-attached pair frame unconditionally, which has
     // no fallback once the matched set outgrows the 8 GB broadcast cap).
-    // withContents widens the pair side itself in its broadcast branch;
-    // the scorerWidth guard below covers the shuffled fallback.
-    val withBytes = scorerWidth(spark, Er.withContents(matched, corpus), corpus)
-    withBytes.select($"id_a".as[Long], $"id_b".as[Long],
+    Er.withContents(matched, corpus)
+      .select($"id_a".as[Long], $"id_b".as[Long],
         $"bytes_a".as[Array[Byte]], $"bytes_b".as[Array[Byte]])
       .mapPartitions { it =>
         val ws = new WfaWorkspace(64, withCigar = true)
@@ -475,8 +441,8 @@ object SparkEntry {
           col("o_orderdate") < lit("1998-01-01").cast("timestamp_ntz"))
       val l = table(s, dir, "lineitem")
       // round 6: a shuffled-hash hint on the orders side was tried and
-      // measured NO better than sort-merge here (BenchExtra 0.82 -> 1.12 s,
-      // bench reps agree) — the sorts on these int keys are not the cost;
+      // measured NO better than sort-merge here (0.82 -> 1.12 s, bench
+      // reps agree) — the sorts on these int keys are not the cost;
       // reverted per guide §1 (measure, keep only wins)
       l.join(o, col("l_orderkey") === col("o_orderkey"))
         .join(broadcast(c), col("o_custkey") === col("c_custkey"))

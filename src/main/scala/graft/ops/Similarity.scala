@@ -16,7 +16,7 @@ object Similarity {
     * null on null elements or length mismatch). Since round 3 this is
     * the native codegen'd [[graft.expr.CosineSim]] expression — the HOF
     * fold it replaces paid per-row lambda dispatch and element boxing
-    * (measured 1.1M vs 6.4M rows/s at dim 64, tools.CosineProbe) with
+    * (measured 1.1M vs 6.4M rows/s at dim 64) with
     * bit-identical IEEE results (same sequential accumulation). Requires
     * [[graft.expr.GraftExtensions]] on the session, like the sampling
     * gate. [[cosineHof]] remains as the pure-built-in parity oracle. */

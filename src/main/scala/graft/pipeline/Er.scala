@@ -75,8 +75,8 @@ object Er {
     * exploded triangle sides, dedup) and as many codegen'd stages; the
     * bench pays that whole chain as a COLD one-shot, so per-stage fixed
     * costs (Janino compile behind its KeyLock, shuffle-file setup, steal
-    * exposure) dominated the measured time (BenchExtra: the join chain
-    * was ~25 s one-shot vs ~4 s warm at sf0.1/local[32]). Now pair
+    * exposure) dominated the measured time (the join chain was ~25 s
+    * one-shot vs ~4 s warm at sf0.1/local[32]). Now pair
     * generation is ONE map-side-combinable sizing aggregation, one
     * eligibility join (the skinny eligible-key side broadcasts when it
     * fits), one collect_list groupBy that lands every eligible block in
@@ -141,38 +141,44 @@ object Er {
         .as("n_rows_dropped"),
       coalesce(max("gsz"), lit(0L)).as("max_block_size"))
 
-  /** Attach both contents (two equi-joins against the corpus — ids-only
-    * pairs stay skinny through the dedup shuffle; content is joined in
-    * last, once per pair side).
+  /** Attach both contents to skinny (id_a, id_b) pairs drawn from one
+    * corpus: `withContents(pairs, corpus, corpus)`. */
+  def withContents(pairs: DataFrame, corpus: DataFrame): DataFrame =
+    withContents(pairs, corpus, corpus)
+
+  /** Attach contents to skinny (id_a, id_b) pairs: side a reads `left`,
+    * side b reads `right` (both (id, content, ...)), giving (id_a, id_b,
+    * bytes_a, bytes_b). Pairs stay ids-only through the dedup shuffle;
+    * content is joined in last, once per pair side.
     *
-    * Round 6 (guide §3.1/§8): when the projected (id, bytes) corpus side
-    * is estimated under [[contentBroadcastLimit]], both attach joins are
-    * explicit broadcast-hash joins — the pairs side is then never
-    * shuffled by content at all (the old plan paid THREE payload
-    * exchanges: corpus by id_a, the half-attached pairs + corpus again by
-    * id_b). Past the limit the plan falls back to the shuffled equi-join
-    * unchanged — the 100-TB shape, where the corpus can never broadcast
-    * and skinny-pairs-then-attach is already the right layout. The limit
-    * is scale-adaptive (plan statistics), not a local[32] constant. */
-  def withContents(pairs: DataFrame, corpus: DataFrame): DataFrame = {
-    val c = corpus.select(col("id"), col("content").cast("binary").as("bytes"))
-    val small = fitsBroadcast(c)
-    def side(sfx: String): DataFrame = {
-      val s = c.select(col("id").as(s"id_$sfx"), col("bytes").as(s"bytes_$sfx"))
-      if (small) broadcast(s) else s
-    }
-    // broadcast branch: the skinny pair frame often arrives AQE-coalesced
-    // to one or two partitions (a million id pairs is only ~16 MB), which
-    // would serialize the whole map-side attach through one task — an
-    // explicit repartition of the ID-ONLY rows (cheap: no payload yet)
-    // restores attach parallelism. The shuffled branch re-partitions by
-    // the join key anyway, so it needs no widening here.
-    val p =
-      if (small)
-        pairs.repartition(pairs.sparkSession.sparkContext.defaultParallelism * 2)
-      else pairs
-    p.join(side("a"), "id_a").join(side("b"), "id_b")
-      .select("id_a", "id_b", "bytes_a", "bytes_b")
+    * This is the one place that sets the scorer's input width, decided at
+    * plan time from the attach branch, never by probing the physical plan:
+    *   - broadcast branch, when both (id, bytes) projections are estimated
+    *     under `SPARK_GRAFT_CONTENT_BROADCAST_MB` ([[fitsBroadcast]]): the
+    *     id-only pairs are repartitioned to 2x `defaultParallelism` before
+    *     two broadcast-hash joins, so content never shuffles. AQE coalesces
+    *     a million id pairs (~16 MB) to one or two partitions, which would
+    *     otherwise serialize the attach and the scorer through one task.
+    *     One (id, bytes) frame is joined twice under aliases; with one
+    *     file-backed corpus, side b reuses side a's exchange. (A cached
+    *     corpus is broadcast twice: AQE gives each scan of a cached frame
+    *     its own query stage and never reuses those.)
+    *   - shuffled branch, past the limit (the 100-TB shape): two shuffled
+    *     equi-joins, then the attached rows are repartitioned to 2x
+    *     `defaultParallelism`, because AQE sizes the join output by bytes
+    *     (~64 MB targets) and would starve the CPU-bound scorer.
+    * The limit reads plan statistics, so the branch adapts to the input
+    * scale instead of being a local-mode constant. */
+  def withContents(pairs: DataFrame, left: DataFrame, right: DataFrame): DataFrame = {
+    val width = pairs.sparkSession.sparkContext.defaultParallelism * 2
+    def content(df: DataFrame) = df.select(col("id"), col("content").cast("binary").as("bytes"))
+    val (ca, cb) = (content(left).as("ca"), content(right).as("cb"))
+    def attach(p: DataFrame, a: DataFrame, b: DataFrame) =
+      p.join(a, col("id_a") === col("ca.id")).join(b, col("id_b") === col("cb.id"))
+        .select(col("id_a"), col("id_b"), col("ca.bytes").as("bytes_a"), col("cb.bytes").as("bytes_b"))
+    if (fitsBroadcast(ca) && fitsBroadcast(cb))
+      attach(pairs.repartition(width), broadcast(ca), broadcast(cb))
+    else attach(pairs, ca, cb).repartition(width)
   }
 
   /** True when the optimizer's size estimate for `df` fits under
@@ -195,29 +201,17 @@ object Er {
     * partition (primitive arrays reused across pairs — no per-pair churn),
     * sequential banded WFA per pair. Emits per-pair lineage inputs
     * (cells expanded, partition id) alongside the score.
+    *
+    * Scoring is the kernel only: it keeps its input's partitioning, so
+    * the scorer's width is whatever [[withContents]] planned (or, for a
+    * controlled-concurrency probe, whatever the caller pinned).
     */
-  /** @param parallelismFloor disable ONLY for controlled-concurrency
-    *   probes (Bench's interleaved scaling legs pin concurrency via the
-    *   input's partition count — a compute-only stage over an
-    *   N-partition cached frame runs exactly N concurrent tasks); every
-    *   production caller keeps the floor. */
-  def score(pairsWithContents: DataFrame, cfg: ErConfig,
-            parallelismFloor: Boolean = true): DataFrame = {
+  def score(pairsWithContents: DataFrame, cfg: ErConfig): DataFrame = {
     val spark = pairsWithContents.sparkSession
     import spark.implicits._
     val band = cfg.band
     val emitCigars = cfg.emitCigars
-    // CPU-bound stage: AQE sizes partitions by bytes and will coalesce a
-    // small-byte but compute-heavy input below core count — keep a floor of
-    // 2x parallelism (no-op when the input is already wide, i.e. at scale;
-    // was 4x, which silently re-shuffled content inside callers that had
-    // already repartitioned to 2x cores)
-    val target = spark.sparkContext.defaultParallelism * 2
-    val input =
-      if (parallelismFloor && pairsWithContents.rdd.getNumPartitions < target)
-        pairsWithContents.repartition(target)
-      else pairsWithContents
-    input
+    pairsWithContents
       .select($"id_a".as[Long], $"id_b".as[Long],
         $"bytes_a".as[Array[Byte]], $"bytes_b".as[Array[Byte]])
       .mapPartitions { it =>
@@ -230,19 +224,6 @@ object Er {
         }
       }
       .toDF("id_a", "id_b", "distance", "saturated", "cigar", "cells", "part_id")
-  }
-
-  /** Pair-level resume: score only candidate pairs absent from an existing
-    * (partial) scored checkpoint, then union — the anti-join resume of
-    * SURVEY.md §2.2 ("semi/anti joins for resume-from-checkpoint"). The
-    * anti-join runs on skinny (id_a, id_b) keys before content is attached. */
-  def scoreIncremental(pairs: DataFrame, corpus: DataFrame,
-                       alreadyScored: DataFrame, cfg: ErConfig): DataFrame = {
-    val todo = pairs.join(alreadyScored.select("id_a", "id_b"),
-      Seq("id_a", "id_b"), "left_anti")
-    score(withContents(todo, corpus), cfg)
-      .unionByName(alreadyScored.select(
-        "id_a", "id_b", "distance", "saturated", "cigar", "cells", "part_id"))
   }
 
   /** Per-partition lineage for the scoring stage (BASELINE.json north_star:
@@ -396,27 +377,26 @@ object Er {
   def assignIncremental(snapshot: DataFrame, batch: DataFrame,
                         cfg: ErConfig, bucketCap: Int = 256): DataFrame = {
     val sn = snapshot.select(col("id").as("id_s"), col("lang"),
-      col("content").as("content_s"), col("entity"),
       floor(length(col("content")) / 64).as("bucket"),
       length(col("content")).as("len_s"))
     // eligible snapshot buckets: tiny (lang, bucket) list, AQE-broadcast
     val elig = sn.groupBy("lang", "bucket").agg(count(lit(1)).as("gsz"))
       .where(col("gsz") <= bucketCap).select("lang", "bucket")
-    val bt = batch.select(col("id"), col("lang"), col("content"),
+    val bt = batch.select(col("id"), col("lang"),
       length(col("content")).as("len"),
       explode(array(floor(length(col("content")) / 64) - 1,
         floor(length(col("content")) / 64),
         floor(length(col("content")) / 64) + 1)).as("bucket"))
-    val cand = bt.join(elig, Seq("lang", "bucket"))
+    // the bucket joins carry ids and lengths only; content is attached to
+    // the surviving pairs, like every other scorer input
+    val pairs = bt.join(elig, Seq("lang", "bucket"))
       .join(sn, Seq("lang", "bucket"))
       .where(abs(col("len") - col("len_s")) < 64)
-    val scored = score(cand.select(col("id").as("id_a"), col("id_s").as("id_b"),
-      col("content").cast("binary").as("bytes_a"),
-      col("content_s").cast("binary").as("bytes_b")), cfg)
-    val matches = scored
+      .select(col("id").as("id_a"), col("id_s").as("id_b"))
+    val matches = score(withContents(pairs, batch, snapshot), cfg)
       .where(!col("saturated") && col("distance") <= cfg.tau)
-      // sn has exactly one row per snapshot doc (single home bucket)
-      .join(sn.select(col("id_s").as("id_b"), col("entity")), "id_b")
+      // one row per snapshot doc
+      .join(snapshot.select(col("id").as("id_b"), col("entity")), "id_b")
       .groupBy(col("id_a").as("id"))
       .agg(min("entity").as("matched_entity"), count(lit(1)).as("n_matches"))
     batch.select("id").join(matches, Seq("id"), "left_outer")

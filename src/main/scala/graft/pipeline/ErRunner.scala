@@ -2,7 +2,6 @@ package graft.pipeline
 
 import graft.io.StageRunner
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
 
 /** Checkpointed end-to-end ER run: each stage is a resumable Parquet
   * checkpoint; scoring writes per-partition lineage. The stage graph is
@@ -11,16 +10,12 @@ import org.apache.spark.sql.functions._
   *
   * Checkpoint layout (round-2 verdict #1): corpus and blocks are
   * Hive-partitioned by `lang` — blocking keys never cross languages, so a
-  * resumed (or lang-scoped) run prunes to the languages it touches;
-  * pairs are range-partitioned into [[PairBuckets]] hash buckets so an
-  * incremental scorer can work bucket-at-a-time with bounded reads. */
+  * resumed (or lang-scoped) run prunes to the languages it touches. The
+  * later stages are flat tables: no reader prunes them. */
 object ErRunner {
 
   val Stages: Seq[String] =
     Seq("corpus", "blocks", "pairs", "scored", "edges", "entities")
-
-  /** Hash-bucket fan-out for the pairs checkpoint. */
-  val PairBuckets = 16
 
   /** @param corpusSource computed only when the `corpus` stage is absent */
   def run(spark: SparkSession, workDir: String, cfg: ErConfig)
@@ -28,10 +23,7 @@ object ErRunner {
     val r = new StageRunner(spark, workDir)
     val corpus = r.stage("corpus", Seq("lang"))(Corpus.withDerived(corpusSource))
     val blocks = r.stage("blocks", Seq("lang"))(Er.blocks(corpus, cfg))
-    val pairs = r.stage("pairs", Seq("pair_bucket")) {
-      Er.candidatePairs(blocks, cfg)
-        .withColumn("pair_bucket", pmod(xxhash64(col("id_a")), lit(PairBuckets)).cast("int"))
-    }
+    val pairs = r.stage("pairs")(Er.candidatePairs(blocks, cfg))
     if (r.computed.contains("pairs")) {
       // recall-policy observability: mass discarded by the mega-block drop
       r.lineage("blocking_policy", Er.blockingLineage(blocks, cfg))

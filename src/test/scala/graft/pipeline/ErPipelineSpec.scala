@@ -2,6 +2,7 @@ package graft.pipeline
 
 import graft.SparkTestBase
 import graft.core.Levenshtein
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -156,16 +157,19 @@ class ErPipelineSpec extends AnyFunSuite with SparkTestBase {
     assert(comps(10L) == 10L && comps(11L) == 10L)
   }
 
-  /** Runs `f` with AQE partition coalescing on or off, restoring the
-    * session's setting afterwards. Off keeps the clustering shuffle at
-    * its 8 partitions, so contraction needs several rounds. */
-  private def withCoalescing[A](on: Boolean)(f: => A): A = {
-    val key = "spark.sql.adaptive.coalescePartitions.enabled"
+  /** Runs `f` with a session conf set, restoring it afterwards. */
+  private def withConf[A](key: String, value: String)(f: => A): A = {
     val prev = spark.conf.getOption(key)
-    spark.conf.set(key, on.toString)
+    spark.conf.set(key, value)
     try f
     finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
   }
+
+  /** Runs `f` with AQE partition coalescing on or off. Off keeps the
+    * clustering shuffle at its 8 partitions, so contraction needs several
+    * rounds. */
+  private def withCoalescing[A](on: Boolean)(f: => A): A =
+    withConf("spark.sql.adaptive.coalescePartitions.enabled", on.toString)(f)
 
   test("connected components: random graphs match a union-find oracle") {
     import spark.implicits._
@@ -262,29 +266,97 @@ class ErPipelineSpec extends AnyFunSuite with SparkTestBase {
     assert(got == expected, s"missing=${expected diff got} extra=${got diff expected}")
   }
 
-  test("score with parallelismFloor off returns the same scores on the same partitions") {
+  test("score keeps its input's partitioning") {
+    // Bench's interleaved scaling legs pin the scorer's concurrency through
+    // the partition count of its input
     val pairs = Er.candidatePairs(Er.blocks(corpus, cfg), cfg)
-    val in = Er.withContents(pairs, corpus).repartition(2)
-    val floored = Er.score(in, cfg).drop("part_id", "cells")
-    val pinned = Er.score(in, cfg, parallelismFloor = false).drop("part_id", "cells")
-    // the bench's interleaved legs rely on: (a) identical results, (b) the
-    // pinned path not widening the 2-partition input
-    assert(Er.score(in, cfg, parallelismFloor = false).rdd.getNumPartitions == 2)
-    assert(pinned.exceptAll(floored).isEmpty && floored.exceptAll(pinned).isEmpty)
+    val pinned = Er.score(Er.withContents(pairs, corpus).repartition(2), cfg)
+    assert(pinned.rdd.getNumPartitions == 2)
+    assert(pinned.select("part_id").distinct().collect().forall(_.getInt(0) < 2))
+    val wide = Er.score(Er.withContents(pairs, corpus), cfg).drop("part_id")
+    val narrow = pinned.drop("part_id")
+    assert(narrow.exceptAll(wide).isEmpty && wide.exceptAll(narrow).isEmpty)
   }
 
-  test("incremental scoring: anti-join resume matches a full scoring run") {
-    val blocks = Er.blocks(corpus, cfg)
-    val pairs = Er.candidatePairs(blocks, cfg).cache()
-    val full = Er.score(Er.withContents(pairs, corpus), cfg)
-      .drop("part_id", "cells") // partition assignment legitimately differs
-    // simulate a killed run that scored only pairs with even id_a
-    val partial = Er.score(
-      Er.withContents(pairs.where(col("id_a") % 2 === 0), corpus), cfg)
-    val resumed = Er.scoreIncremental(pairs, corpus, partial, cfg)
-      .drop("part_id", "cells")
-    assert(resumed.count() == full.count())
-    assert(resumed.exceptAll(full).isEmpty && full.exceptAll(resumed).isEmpty)
+  test("withContents: shuffled and broadcast branches give the same scores at the same width") {
+    val dir = java.nio.file.Files.createTempDirectory("er-attach").toString
+    corpus.write.parquet(s"$dir/corpus")
+    Er.candidatePairs(Er.blocks(corpus, cfg), cfg).write.parquet(s"$dir/pairs")
+    val nPairs = spark.read.parquet(s"$dir/pairs").count()
+    val width = spark.sparkContext.defaultParallelism * 2
+    // a huge compression factor inflates the Parquet scans' size estimates
+    // past the broadcast limit, so the same data takes the shuffled branch
+    def attach(factor: String) =
+      withConf("spark.sql.sources.fileCompressionFactor", factor) {
+        val att = Er.withContents(spark.read.parquet(s"$dir/pairs"),
+          spark.read.parquet(s"$dir/corpus"))
+        (att, att.queryExecution.sparkPlan.toString)
+      }
+    val (broadcastAtt, broadcastPlan) = attach("1.0")
+    val (shuffledAtt, shuffledPlan) = attach("100000")
+    assert(broadcastPlan.contains("BroadcastHashJoin") && !broadcastPlan.contains("SortMergeJoin"),
+      broadcastPlan)
+    assert(shuffledPlan.contains("SortMergeJoin") && !shuffledPlan.contains("BroadcastHashJoin"),
+      shuffledPlan)
+    assert(broadcastAtt.rdd.getNumPartitions == width)
+    // one (id, bytes) frame serves both sides: side b reuses side a's
+    // broadcast exchange
+    broadcastAtt.collect()
+    assert(broadcastAtt.queryExecution.executedPlan.toString.contains("ReusedExchange"))
+    assert(shuffledAtt.rdd.getNumPartitions == width)
+    val viaBroadcast = Er.score(broadcastAtt, cfg).drop("part_id")
+    val viaShuffle = Er.score(shuffledAtt, cfg).drop("part_id")
+    assert(viaBroadcast.count() == nPairs)
+    assert(viaShuffle.exceptAll(viaBroadcast).isEmpty && viaBroadcast.exceptAll(viaShuffle).isEmpty)
+  }
+
+  /** Spark jobs launched while `body` runs. A marker job before and after
+    * `body` drains the listener bus: once the listener has seen a marker
+    * job end, it has seen every event posted before that job started. */
+  private def jobsLaunchedBy(body: => Unit): Int = {
+    val sc = spark.sparkContext
+    val marker = s"drain-${java.util.UUID.randomUUID}"
+    val markerIds = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+    val markersEnded = new java.util.concurrent.Semaphore(0)
+    val started = new java.util.concurrent.atomic.AtomicInteger(0)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == marker))
+          markerIds.add(e.jobId)
+        else started.incrementAndGet()
+      override def onJobEnd(e: SparkListenerJobEnd): Unit =
+        if (markerIds.contains(e.jobId)) markersEnded.release()
+    }
+    def drain(): Unit = {
+      sc.setJobGroup(marker, "listener bus drain")
+      try sc.parallelize(Seq(1), 1).count()
+      finally sc.clearJobGroup()
+      assert(markersEnded.tryAcquire(60, java.util.concurrent.TimeUnit.SECONDS),
+        "listener bus did not drain")
+    }
+    sc.addSparkListener(listener)
+    try {
+      drain()
+      started.set(0)
+      body
+      drain()
+      started.get
+    } finally sc.removeSparkListener(listener)
+  }
+
+  test("building the scorer plans launches no Spark job") {
+    val dir = java.nio.file.Files.createTempDirectory("er-plan").toString
+    ErRunner.run(spark, dir, cfg)(Corpus.generate(spark, genCfg).toDF())
+    // the inputs ErRunner and runIncremental hand the scorer: checkpoint
+    // read-backs (their schema inference runs before the count starts)
+    val cp = spark.read.parquet(s"$dir/corpus")
+    val pairs = spark.read.parquet(s"$dir/pairs")
+    val snapshot = cp.select("id", "lang", "content")
+      .join(spark.read.parquet(s"$dir/entities"), "id")
+    val batch = cp.where(col("id") % 10 === 0)
+      .select((col("id") + 10000000L).as("id"), col("lang"), col("content"))
+    assert(jobsLaunchedBy(Er.score(Er.withContents(pairs, cp), cfg)) == 0)
+    assert(jobsLaunchedBy(Er.assignIncremental(snapshot, batch, cfg)) == 0)
   }
 
   test("resume: completed stages are not recomputed; output identical") {
@@ -376,12 +448,6 @@ class ErPipelineSpec extends AnyFunSuite with SparkTestBase {
       assert(scanned.length < totalFiles,
         s"$stage: pruned read ($one) must touch fewer files than the full table")
     }
-    // pairs: hash-bucketed — a single-bucket read prunes the same way
-    val pairs = spark.read.parquet(s"$dir/pairs")
-    assert(pairs.columns.contains("pair_bucket"))
-    val bucketFiles = pairs.where(col("pair_bucket") === 0)
-      .select(input_file_name()).distinct().collect().map(_.getString(0))
-    assert(bucketFiles.forall(_.contains("pair_bucket=0")))
   }
 
   test("blockingLineage counts exactly the blocks over the salted cap") {
